@@ -165,7 +165,7 @@ def main() -> None:
     # the reference's core op: footer-only DDL (no Spark job expected)
     times["schema_to_clickhouse"] = median_time(
         lambda: schema_to_clickhouse(
-            f"{sf_dir}/lineitem.parquet", "lineitem", "l_orderkey", spark=spark
+            f"{sf_dir}/lineitem.parquet", "lineitem", "l_orderkey"
         )
     )
 

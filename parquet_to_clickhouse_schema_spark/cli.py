@@ -56,11 +56,13 @@ def main(argv: list[str] | None = None) -> int:
         default=None,
         metavar="CACHE_JSON",
         help="per-partition footer-fingerprint cache file (used by "
-        "--drift-report AND by the CREATE path's strict drift gate) — "
-        "unchanged partitions (same file names/sizes/mtimes) are served "
-        "from the cache and only mutated partitions re-read their "
-        "footers; the file is created on first run and rewritten "
-        "atomically each run",
+        "--drift-report, by the CREATE path's strict gates — physical "
+        "types and drift — and by --unify) — unchanged partitions (same "
+        "file names/sizes/mtimes) are served from the cache and only "
+        "mutated partitions re-read their footers; a part-file rewritten "
+        "in place with the same size and mtime is not re-read, so delete "
+        "the cache after such a rewrite; the file is created on first run "
+        "and rewritten atomically each run",
     )
 
     def _is_standalone_flag(a: str) -> bool:

@@ -63,7 +63,7 @@ def q_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Footer-only schema inference surfaced as a query: one row per column with Spark type and nullability (no data pages read)."""
     rows = []
     for t in TABLES:
-        schema = infer_parquet_schema(f"{sf_dir}/{t}.parquet", spark)
+        schema = infer_parquet_schema(f"{sf_dir}/{t}.parquet")
         for f in schema.fields:
             for path, st, nl in _leaves(f.name, f.dataType, f.nullable):
                 rows.append((t, path, st, bool(nl)))
@@ -84,7 +84,7 @@ def q_ddl_clickhouse(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             t,
             struct_to_clickhouse_ddl(
-                infer_parquet_schema(f"{sf_dir}/{t}.parquet", spark), t, _PKS[t]
+                infer_parquet_schema(f"{sf_dir}/{t}.parquet"), t, _PKS[t]
             ),
         )
         for t in TABLES
@@ -98,7 +98,7 @@ def q_ddl_sparksql(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             t,
             struct_to_spark_ddl(
-                infer_parquet_schema(f"{sf_dir}/{t}.parquet", spark),
+                infer_parquet_schema(f"{sf_dir}/{t}.parquet"),
                 t,
                 location=f"{sf_dir}/{t}.parquet",
             ),

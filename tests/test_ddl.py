@@ -66,7 +66,7 @@ def test_golden_ref_nested_roundtrip_parquet(spark, tmp_path):
     p = str(tmp_path / "p.parquet")
     df.write.parquet(p)
     out = str(tmp_path / "clickhouse_schema.sql")
-    ddl = schema_to_clickhouse(p, "T", "foo", spark=spark, out_path=out)
+    ddl = schema_to_clickhouse(p, "T", "foo", out_path=out)
     assert ddl == GOLDEN_REF_NESTED
     with open(out) as fh:
         assert fh.read() == GOLDEN_REF_NESTED
@@ -288,8 +288,8 @@ def test_legacy_two_level_list_encoding(spark, tmp_path):
         spark.conf.set("spark.sql.parquet.writeLegacyFormat", "false")
     df.coalesce(1).write.parquet(std_dir)
 
-    ddl_legacy = schema_to_clickhouse(legacy_dir, "t", "id", spark=spark)
-    ddl_std = schema_to_clickhouse(std_dir, "t", "id", spark=spark)
+    ddl_legacy = schema_to_clickhouse(legacy_dir, "t", "id")
+    ddl_std = schema_to_clickhouse(std_dir, "t", "id")
     assert ddl_legacy == ddl_std
     assert (
         "    , tags Nested (\n"
@@ -665,18 +665,13 @@ def _write_fragment(dirpath, name, cols):
     pq.write_table(pa.table(cols), str(dirpath / name))
 
 
-def test_fragment_drift_report_and_distributed_scan(tmp_path, spark):
+def test_fragment_drift_report_and_distributed_scan(tmp_path):
     """pyarrow dataset discovery reports the FIRST fragment's schema, so a
     retyped/extended later part-file is invisible to dataset-level
-    inference; schema_drift_report reads every footer and surfaces it. The
-    Spark-distributed footer scan (threshold forced to 1) must agree with
-    the driver loop exactly."""
+    inference; schema_drift_report reads every footer and surfaces it."""
     import pyarrow as pa
 
-    from parquet_to_clickhouse_schema_spark.ddl import (
-        fragment_schemas,
-        schema_drift_report,
-    )
+    from parquet_to_clickhouse_schema_spark.ddl import schema_drift_report
 
     d = tmp_path / "t.parquet"
     d.mkdir()
@@ -696,11 +691,6 @@ def test_fragment_drift_report_and_distributed_scan(tmp_path, spark):
     ]
     assert report[0]["old_type"] == "bigint" and report[0]["new_type"] == "int"
     assert all(r["reference_file"].endswith("part-000.parquet") for r in report)
-
-    # executor-fanned footer scan == driver loop (order and schemas)
-    local = fragment_schemas(str(d))
-    dist = fragment_schemas(str(d), spark, distributed_threshold=1)
-    assert [(f, s.json()) for f, s in local] == [(f, s.json()) for f, s in dist]
 
     # a uniform dataset reports no drift
     u = tmp_path / "u.parquet"
@@ -1108,14 +1098,14 @@ def test_unified_schema_nested_promotion(tmp_path):
     assert "meta" in str(exc.value) and "a" in str(exc.value)
 
 
-def test_fragment_scan_fingerprint_collect_parity(tmp_path, spark):
-    """The fan-out footer scan dedups schema JSON inside each task and
-    ships (file, fingerprint) + one exemplar per distinct schema — results
-    must stay identical to the driver loop, including on drifted and on
-    hive-partitioned layouts."""
+def test_fragment_scan_fingerprint_collect_parity(tmp_path):
+    """The footer scan keeps one exemplar per distinct schema and shares it
+    across the files that carry it, on drifted and on hive-partitioned
+    layouts."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from parquet_to_clickhouse_schema_spark.ddl import fragment_schemas
+    from parquet_to_clickhouse_schema_spark.ddl import _footer_scan, fragment_schemas
 
     d = tmp_path / "t.parquet"
     for part, n, cols in (
@@ -1126,13 +1116,18 @@ def test_fragment_scan_fingerprint_collect_parity(tmp_path, spark):
         sub = d / part
         sub.mkdir(parents=True)
         for i in range(n):
-            _write_fragment(sub, f"part-{i:03d}.parquet", cols(i))
+            # per-file schema metadata (like pandas' index ranges) maps to
+            # no Spark type and must not split a schema's exemplar
+            pq.write_table(
+                pa.table(cols(i)).replace_schema_metadata({"job": str(i)}),
+                str(sub / f"part-{i:03d}.parquet"),
+            )
 
     local = fragment_schemas(str(d))
-    dist = fragment_schemas(str(d), spark, distributed_threshold=1)
-    assert [(f, s.json()) for f, s in local] == [(f, s.json()) for f, s in dist]
+    assert len(local) == 6
     # exactly two distinct schemas across six files
-    assert len({s.json() for _, s in dist}) == 2
+    assert len({s.json() for _, s in local}) == 2
+    assert len(_footer_scan(str(d)).exemplars) == 2
 
 
 def test_cli_drift_report_added_removed_lines_and_flag_conflict(tmp_path):
@@ -1835,14 +1830,29 @@ def test_cli_drift_report_with_cache(tmp_path, capsys):
     assert "2 served from cache" in out2
 
 
+def _count_footer_reads(monkeypatch) -> list[str]:
+    """Record the source of every pyarrow footer read made through
+    pyarrow.parquet (ParquetFile, read_schema, read_metadata) from now on."""
+    import pyarrow.parquet as pq
+
+    reads: list[str] = []
+    for name in ("ParquetFile", "read_schema", "read_metadata"):
+
+        def counted(source, *args, _real=getattr(pq, name), **kwargs):
+            reads.append(str(source))
+            return _real(source, *args, **kwargs)
+
+        monkeypatch.setattr(pq, name, counted)
+    return reads
+
+
 def test_schema_to_clickhouse_drift_cache(tmp_path, monkeypatch):
-    """r14: the strict CREATE path's drift gate accepts the incremental
-    cache — the second DDL generation on an unchanged dataset reads ZERO
-    footers for the drift check, and a drifted partition added later still
+    """r14: the strict CREATE path accepts the incremental cache — the
+    second DDL generation on an unchanged dataset reads ZERO footers, the
+    physical-type gate included, and a drifted partition added later still
     raises SchemaDriftError through the cached path."""
     import pyarrow as pa
 
-    from parquet_to_clickhouse_schema_spark import ddl as ddl_mod
     from parquet_to_clickhouse_schema_spark.ddl import SchemaDriftError
 
     d = tmp_path / "t.parquet"
@@ -1855,14 +1865,8 @@ def test_schema_to_clickhouse_drift_cache(tmp_path, monkeypatch):
     out1 = schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
     assert "partition by (year)" in out1
 
-    # second run: the drift gate must not re-read any footer. The
-    # physical-type scan (_strict_physical_violations) reads footers for
-    # its own INT96/FLBA evidence, so count only the drift gate's reads.
-    reads = []
-    real = ddl_mod._read_footer_schema_json
-    monkeypatch.setattr(
-        ddl_mod, "_read_footer_schema_json", lambda f: (reads.append(f), real(f))[1]
-    )
+    # second run: the whole call reads no footer
+    reads = _count_footer_reads(monkeypatch)
     out2 = schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
     assert out2 == out1
     assert reads == []  # every partition served from the cache
@@ -1911,12 +1915,11 @@ def test_unified_schema_drift_cache(tmp_path, monkeypatch):
     """r14: the --unify promotion scan accepts the shared drift cache —
     the second unify on an unchanged tree reads ZERO footers, a mutated
     partition re-reads only itself, the promoted schema is identical to
-    the uncached path, and the drift/unify payloads coexist in ONE cache
-    file without clobbering each other."""
+    the uncached path, and the drift scan and the unify scan serve each
+    other from the one cache section."""
     import json as _json
 
     import pyarrow as pa
-    import pyarrow.parquet as _pq
 
     from parquet_to_clickhouse_schema_spark.ddl import (
         incremental_drift_scan,
@@ -1937,17 +1940,22 @@ def test_unified_schema_drift_cache(tmp_path, monkeypatch):
     got1 = unified_parquet_schema(str(d), drift_cache=cache)
     assert got1.simpleString() == expected.simpleString()
 
-    # drift scan shares the file; its write must preserve the arrow payload
-    incremental_drift_scan(str(d), cache)
-    blob = _json.loads((tmp_path / "cache.json").read_text())
-    assert "arrow_partitions" in blob and "partitions" in blob
-
-    reads = []
-    real = _pq.read_schema
-    monkeypatch.setattr(_pq, "read_schema", lambda f, **kw: (reads.append(str(f)), real(f, **kw))[1])
+    # one cache section serves both: the drift scan right after the unify
+    # scan reads no footer ...
+    reads = _count_footer_reads(monkeypatch)
+    assert incremental_drift_scan(str(d), cache)["footers_read"] == 0
+    assert reads == []
     got2 = unified_parquet_schema(str(d), drift_cache=cache)
     assert got2.simpleString() == expected.simpleString()
     assert reads == []  # steady state: zero footer reads
+
+    # ... and neither does the unify scan right after a drift scan
+    other_order = str(tmp_path / "drift-first.json")
+    incremental_drift_scan(str(d), other_order)
+    reads.clear()
+    got_other = unified_parquet_schema(str(d), drift_cache=other_order)
+    assert got_other.simpleString() == expected.simpleString()
+    assert reads == []
 
     # mutate one partition: only it re-reads; result still matches uncached
     _write_fragment(
@@ -1980,3 +1988,168 @@ def test_unified_schema_drift_cache(tmp_path, monkeypatch):
     assert any("different dataset root" in str(w.message) for w in caught)
     blob2 = _json.loads((tmp_path / "cache.json").read_text())
     assert "_reset_from_root" not in blob2
+
+
+def _write_hive_tree(root, years, files_per_part=1, typ=None):
+    """``year=Y/part-NNN.parquet`` fragments with one ``id`` column."""
+    import pyarrow as pa
+
+    written = []
+    for year in years:
+        sub = root / f"year={year}"
+        sub.mkdir(parents=True)
+        for i in range(files_per_part):
+            _write_fragment(
+                sub, f"part-{i:03d}.parquet", {"id": pa.array([i], typ or pa.int64())}
+            )
+            written.append(str(sub / f"part-{i:03d}.parquet"))
+    return written
+
+
+def test_int96_in_appended_partition_raises_through_cache(tmp_path, monkeypatch):
+    """The drift cache serves the physical-type gate: an INT96 fragment in
+    a newly appended partition raises UnsupportedTypeError through the
+    cached path, and the warm rerun, which reads no footer, still raises."""
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "t.parquet"
+    cache = str(tmp_path / "cache.json")
+
+    def write_partition(year, int96):
+        sub = d / f"year={year}"
+        sub.mkdir(parents=True)
+        pq.write_table(
+            pa.table({"id": pa.array([1], pa.int64()),
+                      "ts": pa.array([datetime(2024, 1, 2)], pa.timestamp("us"))}),
+            str(sub / "part-000.parquet"),
+            use_deprecated_int96_timestamps=int96,
+        )
+
+    write_partition(2024, int96=False)
+    ddl = schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
+    assert "partition by (year)" in ddl
+    write_partition(2025, int96=True)
+    with pytest.raises(UnsupportedTypeError, match="INT96"):
+        schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
+    reads = _count_footer_reads(monkeypatch)
+    with pytest.raises(UnsupportedTypeError, match="INT96"):
+        schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
+    assert reads == []
+
+
+def test_v1_scan_cache_falls_back_to_full_rescan(tmp_path):
+    """A version-1 cache file (Spark-JSON ``partitions``/``exemplars`` plus
+    arrow-IPC ``arrow_partitions``/``arrow_exemplars``, with listing
+    fingerprints that match the tree) is not served: the scan reads every
+    footer, reports exactly what the uncached scan reports, and rewrites
+    the file in the current version."""
+    import base64
+    import hashlib
+    import json as _json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_to_clickhouse_schema_spark.ddl import (
+        fragment_schemas,
+        incremental_drift_scan,
+        schema_drift_report,
+    )
+
+    d = tmp_path / "t.parquet"
+    files = _write_hive_tree(d, (2024,)) + _write_hive_tree(d, (2025,), typ=pa.int32())
+    cache = tmp_path / "cache.json"
+    incremental_drift_scan(str(d), str(cache))
+    current = _json.loads(cache.read_text())
+
+    def md5(b):
+        return hashlib.md5(b).hexdigest()
+
+    spark_json = {f: s.json() for f, s in fragment_schemas(str(d))}
+    ipc = {f: pq.read_schema(f).serialize().to_pybytes() for f in files}
+    v1 = {"version": 1, "root": current["root"], "partitions": {},
+          "exemplars": {}, "arrow_partitions": {}, "arrow_exemplars": {}}
+    for part, entry in current["partitions"].items():
+        rels = list(entry["files"])
+        paths = [os.path.join(str(d), rel) for rel in rels]
+        v1["partitions"][part] = {
+            "listing_fp": entry["listing_fp"],
+            "files": {r: md5(spark_json[p].encode()) for r, p in zip(rels, paths)},
+        }
+        v1["arrow_partitions"][part] = {
+            "listing_fp": entry["listing_fp"],
+            "files": {r: md5(ipc[p]) for r, p in zip(rels, paths)},
+        }
+        for p in paths:
+            v1["exemplars"][md5(spark_json[p].encode())] = spark_json[p]
+            v1["arrow_exemplars"][md5(ipc[p])] = base64.b64encode(ipc[p]).decode()
+    cache.write_text(_json.dumps(v1))
+
+    scan = incremental_drift_scan(str(d), str(cache))
+    assert scan["footers_read"] == len(files)
+    assert scan["report"] == schema_drift_report(str(d))
+    assert [(r["column"], r["change"]) for r in scan["report"]] == [
+        ("id", "type_changed")
+    ]
+    assert _json.loads(cache.read_text())["version"] == current["version"] != 1
+
+
+def test_strict_unreadable_footer_names_the_file(tmp_path):
+    """A truncated part-file in a directory dataset fails the strict DDL
+    loudly, naming the file — with and without --drift-cache — and the
+    failing run leaves the existing cache file unchanged."""
+    import contextlib
+    import io
+    import re
+
+    from parquet_to_clickhouse_schema_spark.cli import main
+
+    d = tmp_path / "t.parquet"
+    good = _write_hive_tree(d, (2024, 2025))
+    cache = tmp_path / "cache.json"
+    argv = ["--parquet-path", str(d), "--clickhouse-schema-path",
+            str(tmp_path / "ddl.sql"), "--table-name", "t", "--primary-key", "id",
+            "--drift-cache", str(cache)]
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert main(argv) == 0
+    before = cache.read_bytes()
+
+    bad = d / "year=2025" / "part-001.parquet"
+    with open(good[0], "rb") as fh:
+        bad.write_bytes(fh.read()[:20])
+    with pytest.raises((OSError, ValueError), match=re.escape(str(bad))):
+        schema_to_clickhouse(str(d), "t", "id")
+    with pytest.raises((OSError, ValueError), match=re.escape(str(bad))):
+        with contextlib.redirect_stdout(io.StringIO()):
+            main(argv)
+    assert cache.read_bytes() == before
+
+
+def test_footer_read_budget(tmp_path, monkeypatch):
+    """One footer scan per schema_to_clickhouse call: strict cold and
+    strict --unify read each part-file's footer at most once; a warm,
+    unchanged cache reads none; after one partition is appended only that
+    partition's files are read."""
+    from collections import Counter
+
+    d = tmp_path / "t.parquet"
+    files = _write_hive_tree(d, (2024, 2025, 2026), files_per_part=2)
+    cache = str(tmp_path / "cache.json")
+    reads = _count_footer_reads(monkeypatch)
+
+    def reads_of(**kwargs):
+        reads.clear()
+        schema_to_clickhouse(str(d), "t", "id", **kwargs)
+        return Counter(reads)
+
+    for kwargs in ({}, {"unify": True}):
+        per_file = reads_of(**kwargs)
+        assert set(per_file) <= set(files) and max(per_file.values()) == 1, kwargs
+    assert set(reads_of(drift_cache=cache)) == set(files)
+    assert reads_of(drift_cache=cache) == Counter()
+    appended = _write_hive_tree(d, (2027,), files_per_part=2)
+    assert reads_of(drift_cache=cache) == Counter(appended)
