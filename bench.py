@@ -170,8 +170,9 @@ def main() -> None:
     )
 
     for i, name in enumerate(HEADLINE):
-        # plan construction outside the timer; re-built per rep so no rep
-        # benefits from a previous rep's materialized AQE plan
+        # plan construction is inside the timer: run() builds the DataFrame,
+        # so the Spark jobs a build fires are timed too; re-built per rep so
+        # no rep benefits from a previous rep's materialized AQE plan
         def run(name=name):
             df = queries[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()

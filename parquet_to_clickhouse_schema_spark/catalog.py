@@ -45,9 +45,12 @@ _UNARY_OPS = {ast.UAdd: operator.pos, ast.USub: operator.neg}
 # deterministic re-parameterization whose registers/picks/codes a DuckDB
 # oracle rebuilds bit-for-bit) OR a golden test ("golden:<path>": a
 # byte-exact artifact compare, used for the two DDL string emitters whose
-# output is a script, not a relation). This table previously lived only in
-# prose + docstrings; tests/test_contract_guards.py asserts it stays
-# complete and that every named twin really is oracle-gated.
+# output is a script, not a relation). q_ivf_topk, q_pq_topk and
+# q_ivfpq_topk run the same pipeline as their twins with trained instead of
+# md5 parameters (operators/llm_ann._ann_search), so those gates cover the
+# shipped code; the other "q_*" twins are separate implementations.
+# tests/test_contract_guards.py asserts the table stays complete and that
+# every named twin really is oracle-gated.
 ROWS_ONLY_TWINS: dict[str, str] = {
     "q_agg_approx_distinct": "q_hll_verified",
     "q_ann_lsh_topk": "q_ann_verified_topk",

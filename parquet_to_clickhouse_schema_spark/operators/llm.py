@@ -5,7 +5,8 @@ lines / ~60 operators, 3.7x the next-largest operator file):
 - llm_dedup   — text dedup: exact, MinHash/LSH, SimHash, n-gram, clusters,
                 pipeline, embedding near-dup, source Jaccard matrix
 - llm_ann     — similarity search: cosine top-k, LSH/IVF/PQ/IVF-PQ + their
-                verified twins, recall eval, distributed Lloyd's k-means
+                verified twins (each IVF/PQ/IVF-PQ key and its twin share
+                one pipeline), recall eval, distributed Lloyd's k-means
 - llm_cluster — clustering + corpus quality: SemDeDup, hard negatives,
                 random projection, text stats, fuzzy pairs, keep-best,
                 substring dedup, quantization, containment

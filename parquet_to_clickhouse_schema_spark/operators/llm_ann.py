@@ -2,7 +2,9 @@
 labeled O(n^2) baseline), LSH random-hyperplane banding, IVF coarse
 quantization, PQ/IVF-PQ asymmetric-distance search — each with an
 md5-derived deterministic "verified" twin whose DuckDB oracle rebuilds the
-whole mechanism — plus the recall evaluation harness.
+whole mechanism — plus the recall evaluation harness. The exact baseline,
+IVF, PQ and IVF-PQ, trained or md5-derived, run one pipeline
+(_ann_search) whose parameters are data.
 
 Split out of operators/llm.py in r18 (VERDICT r17 task #5) — a mechanical
 move, no behavior change. Signatures/buckets/probed lists shuffle as
@@ -86,7 +88,8 @@ def cosine_topk_blocked(
     spark: SparkSession, sf_dir: str, k: int = 3, index_block_rows: int = 1024
 ) -> DataFrame:
     """Exact cosine top-k as ONE distributed job: 2-D block-cogroup
-    all-pairs.
+    all-pairs — the IVF/PQ pipeline (_ann_search) given neither coarse
+    centroids nor codebooks.
 
     Both sides are hash-partitioned into a ceil(n / index_block_rows)² tile
     grid (see _block_sides); each (qblk, iblk) tile meets in
@@ -109,39 +112,7 @@ def cosine_topk_blocked(
     (-cos, nbr_id), rounded only after the global re-rank — per-tile
     partials carry RAW cosine so cross-tile ties resolve exactly as the
     oracle's single sort does."""
-    import numpy as np
-    import pandas as pd
-
-    n = _embeddings_rowcount(spark, sf_dir)  # footer metadata, no Spark job
-    n_blocks = max(1, -(-n // index_block_rows))
-    fanout, indexed = _block_sides(spark, sf_dir, n_blocks, n_blocks)
-
-    def topk_cogroup(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(ipdf) == 0:
-            return _empty_pairs("cos_raw")
-        a_ids = qpdf["vec_id"].to_numpy()
-        a_mat = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-        a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-        b_ids = ipdf["vec_id"].to_numpy()
-        b_mat = np.stack(ipdf["embedding"].to_numpy()).astype("float64")
-        b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
-        cos = (a_mat @ b_mat.T) / (a_norms[:, None] * b_norms[None, :])
-        out_vec, out_nbr, out_cos = _partial_topk(a_ids, b_ids, cos, k)
-        if not out_vec:
-            return _empty_pairs("cos_raw")
-        return pd.DataFrame({"vec_id": out_vec, "nbr_id": out_nbr, "cos_raw": out_cos})
-
-    partials = (
-        fanout.groupBy("qblk", "iblk")
-        .cogroup(indexed.groupBy("qblk", "iblk"))
-        .applyInPandas(topk_cogroup, schema="vec_id long, nbr_id long, cos_raw double")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_raw").desc(), "nbr_id")
-    return (
-        partials.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("vec_id", "nbr_id", qround(F.col("cos_raw"), 4).alias("cosine"))
-    )
+    return _ann_search(spark, sf_dir, k, index_block_rows=index_block_rows)
 
 
 def cosine_topk_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,6 +274,211 @@ def _train_coarse_centroids(e: DataFrame, n_centroids: int, iters: int = 4):
     return cent / np.maximum(n, 1e-12)
 
 
+# ----------------------------------------------- IVF / PQ / IVF-PQ pipeline ---
+# One pipeline serves the exact tile baseline (cosine_topk_blocked), the
+# trained keys (ivf_topk / pq_topk / ivfpq_topk) and their md5 twins
+# (q_*_verified_topk). Parameters are data: coarse centroids (lists x dim)
+# and PQ codebooks (m x ksub x dsub), trained (_train_coarse_centroids,
+# pq_train_codebooks_distributed) or md5-derived (_md5_grid_np). The
+# twins' oracle SQL defines every stage, so the hash check on a twin
+# covers the code its trained key runs. Parameters are k x dim arrays on
+# the Spark driver, captured in the kernel closures like any other constant.
+
+
+def _rows(pdf, col: str = "embedding"):
+    """float64 matrix of an array column of a pandas batch."""
+    import numpy as np
+
+    return np.stack(pdf[col].to_numpy()).astype("float64")
+
+
+def _probe_lists(e: DataFrame, centroids, n_probe: int) -> DataFrame:
+    """Coarse assign/probe stage: each (vec_id, embedding) row fans out to
+    its n_probe nearest inverted lists `cid`, ranked by cosine to the
+    centroid with the lower list first on ties — the oracles' ORDER BY
+    dot / cn DESC, c. n_probe=1 is the list assignment. One mapInPandas
+    pass; the SQL form (posexplode → groupBy(vec_id, c) → window)
+    measured slower."""
+    import numpy as np
+    import pandas as pd
+
+    cm = centroids / np.sqrt((centroids * centroids).sum(axis=1))[:, None]
+
+    def probe(batches):
+        for b in batches:
+            if len(b) == 0:
+                continue
+            ids, unit = _unit_rows(b)
+            near = np.argsort(-(unit @ cm.T), axis=1, kind="stable")[:, :n_probe]
+            rows = np.repeat(np.arange(len(b)), n_probe)
+            yield pd.DataFrame(
+                {
+                    "vec_id": ids[rows],
+                    "embedding": b["embedding"].iloc[rows].to_numpy(),
+                    "cid": near.reshape(-1).astype("int32"),
+                }
+            )
+
+    return e.mapInPandas(probe, schema="vec_id long, embedding array<float>, cid int")
+
+
+def _pq_dists(mat, books):
+    """Squared L2 from each raw subvector of the rows of `mat` (n x dim)
+    to every codeword of `books` (m x ksub x dsub): an (n, m, ksub) table.
+    Its argmin is a row's PQ code (lowest code on ties — the oracles'
+    ORDER BY d2, code); for a query it is the ADC lookup table."""
+    m, ksub, dsub = books.shape
+    diff = mat.reshape(len(mat), m, 1, dsub) - books[None]
+    return (diff * diff).sum(axis=-1)
+
+
+def _encode(df: DataFrame, books) -> DataFrame:
+    """PQ encode stage: the embedding column becomes `codes`, m small ints
+    per vector, so the index side shuffles codes instead of dim floats
+    (32x less at dim=64/m=8)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [f for f in df.schema.fields if f.name != "embedding"]
+        + [T.StructField("codes", T.ArrayType(T.IntegerType()))]
+    )
+
+    def encode(batches):
+        for b in batches:
+            if len(b) == 0:
+                continue
+            codes = _pq_dists(_rows(b), books).argmin(axis=-1).astype("int32")
+            yield b.drop(columns="embedding").assign(codes=list(codes))
+
+    return df.mapInPandas(encode, schema=schema)
+
+
+def _score_lists(
+    qside: DataFrame, iside: DataFrame, keys: tuple, top: int, books=None
+) -> DataFrame:
+    """List scorer stage: queries and index vectors meet per group of
+    `keys` — an inverted list (cid) or a tile (qblk, iblk) — in one
+    cogroup; one matmul scores the group and only each query's partial
+    top-`top` leaves the kernel, then a window keeps the global top.
+
+    `score` is the exact cosine, or with `books` the negated
+    1e-6-quantized ADC (squared L2 summed over subspaces, as one dgemm of
+    the query lookup tables against the one-hot index codes; the
+    per-subspace gather measured 1.8-6x slower on 500x125 to 2000x2000
+    groups). Larger is better in both, and
+    (score, nbr_id) is the oracles' total order, so partial-then-global
+    top-k is lossless. ADC is quantized because shared codes make raw ties
+    common and summation order would break them differently per engine."""
+    import numpy as np
+    import pandas as pd
+
+    def kernel(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
+        if len(qpdf) == 0 or len(ipdf) == 0:
+            return _empty_pairs("score")
+        a_ids, a_mat = qpdf["vec_id"].to_numpy(), _rows(qpdf)
+        b_ids = ipdf["vec_id"].to_numpy()
+        if books is None:
+            b_mat = _rows(ipdf)
+            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
+            b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
+            score = (a_mat @ b_mat.T) / (a_norms[:, None] * b_norms[None, :])
+        else:
+            m, ksub, _ = books.shape
+            codes = np.stack(ipdf["codes"].to_numpy())
+            onehot = np.zeros((len(b_ids), m * ksub))
+            onehot[np.arange(len(b_ids))[:, None], np.arange(m) * ksub + codes] = 1.0
+            lut = _pq_dists(a_mat, books).reshape(len(a_ids), m * ksub)
+            score = -(np.floor((lut @ onehot.T) * 1e6 + 0.5) / 1e6)
+        out_vec, out_nbr, out_sc = _partial_topk(a_ids, b_ids, score, top)
+        if not out_vec:
+            return _empty_pairs("score")
+        return pd.DataFrame({"vec_id": out_vec, "nbr_id": out_nbr, "score": out_sc})
+
+    partials = (
+        qside.groupBy(*keys)
+        .cogroup(iside.groupBy(*keys))
+        .applyInPandas(kernel, schema="vec_id long, nbr_id long, score double")
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("score").desc(), "nbr_id")
+    return partials.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= top)
+
+
+def _exact_rerank(spark: SparkSession, sf_dir: str, cand: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank stage: each shortlisted (vec_id, nbr_id) pair gets its
+    exact cosine over the raw vectors (a JVM zip_with dot product on
+    refine x n rows, never n²), and the top k per query by the 4-dp cosine,
+    then nbr_id — duplicate embeddings make exact ties common, so the
+    oracles rank the quantized value."""
+    va = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
+        F.col("vec_id"), F.col("vec").alias("va"), F.col("norm").alias("na")
+    )
+    vb = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
+        F.col("vec_id").alias("nbr_id"), F.col("vec").alias("vb"), F.col("norm").alias("nb")
+    )
+    dot = F.aggregate(
+        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    exact = cand.join(va, "vec_id").join(vb, "nbr_id").select(
+        "vec_id", "nbr_id", qround(dot / (F.col("na") * F.col("nb")), 4).alias("cosine")
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "nbr_id")
+    return (
+        exact.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("vec_id", "nbr_id", "cosine")
+    )
+
+
+def _ann_search(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int,
+    centroids=None,
+    n_probe: int = 1,
+    books=None,
+    refine: int = 0,
+    index_block_rows: int = 1024,
+) -> DataFrame:
+    """Cosine top-k neighbors per vector: the one IVF / PQ / IVF-PQ
+    pipeline, its stages chosen by which parameters it is given.
+
+    - `centroids`: every query probes its n_probe nearest inverted lists
+      and meets only the vectors assigned to them (cogroup on the list id,
+      ~n * n_probe / lists candidates per query). Without centroids every
+      query meets every vector in a 2-D tile grid of index_block_rows-row
+      blocks (_block_sides).
+    - `books`: the index side is PQ-encoded and the list scorer ranks by
+      ADC, keeping a `refine` shortlist per query for the exact re-rank.
+      Without books the list scorer ranks the exact cosine itself (raw,
+      4-dp only on output).
+
+    With neither it is the exact all-pairs top-k (q_cosine_topk). At
+    100 TB: no vector transits the Spark driver, the list sides shuffle n_probe
+    query copies and one index copy (codes only under PQ), and hot lists
+    shrink as the list count grows."""
+    if centroids is None:
+        n = _embeddings_rowcount(spark, sf_dir)  # footer metadata, no Spark job
+        n_blocks = max(1, -(-n // index_block_rows))
+        qside, iside = _block_sides(spark, sf_dir, n_blocks, n_blocks)
+        keys = ("qblk", "iblk")
+    else:
+        # two reads: a self-cogroup trips the analyzer's self-join dedup
+        # (see _block_sides)
+        def lists(n: int) -> DataFrame:
+            e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+            return _probe_lists(e, centroids, n)
+
+        qside, iside = lists(n_probe), lists(1)
+        keys = ("cid",)
+    if books is None:
+        top = _score_lists(qside, iside, keys, k)
+        return top.select("vec_id", "nbr_id", qround(F.col("score"), 4).alias("cosine"))
+    shortlist = _score_lists(qside, _encode(iside, books), keys, refine, books)
+    return _exact_rerank(spark, sf_dir, shortlist.select("vec_id", "nbr_id"), k)
+
+
 def ivf_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -313,101 +489,20 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF-Flat approximate nearest neighbors: the inverted-list scale path.
 
-    Index build: the coarse quantizer is trained DISTRIBUTED end-to-end
-    (_train_coarse_centroids → kmeans_fit: Lloyd's over the full corpus,
-    deterministic farthest-point init); every vector is assigned to its
-    nearest centroid (one small matmul). Query: each vector probes its
-    n_probe nearest centroid lists and ranks only those candidates — cost
-    drops from O(n²) to O(n² * n_probe / n_centroids) with recall
-    controlled by n_probe (measured on the hard case of random
-    near-orthogonal vectors at 16 centroids: recall 0.44/0.63/0.86 at
-    n_probe 2/4/8 with Lloyd-trained centroids, up from 0.31/0.49/0.75
-    under plain sampled centroids; clustered real-world embeddings do
-    far better still).
-
-    At 100 TB: centroid assignment is a broadcast matmul (centroids are
-    tiny); candidate ranking is a COGROUP on centroid id — the same
-    join-not-crossjoin shape as MinHash banding and hyperplane LSH, so it
-    partitions and scales identically. The only driver-side collect is the
-    n_centroids sample rows (TakeOrdered, bounded) — the index itself stays
-    distributed: assignment and probing each run as one mapInPandas pass,
-    and each (query-probe, inverted-list) pair meets in
-    groupBy(cid).cogroup(...).applyInPandas where one BLAS matmul ranks the
-    list. Probing shuffles n_probe copies of the query vectors — the
-    standard distributed-IVF trade (bucket by cid to pre-partition it away).
+    Trained parameters through the shared pipeline (_ann_search, the same
+    code q_ivf_verified_topk runs on md5 centroids): the coarse quantizer
+    trains DISTRIBUTED over the full corpus (_train_coarse_centroids →
+    kmeans_fit: Lloyd's, deterministic farthest-point init), every vector
+    is assigned to its nearest centroid, and each query probes its n_probe
+    nearest lists and ranks only those candidates — cost drops from O(n²)
+    to O(n² * n_probe / n_centroids) with recall controlled by n_probe
+    (measured on the hard case of random near-orthogonal vectors at 16
+    centroids: recall 0.44/0.63/0.86 at n_probe 2/4/8).
     Approximate → not oracle-gated; tests assert recall vs q_cosine_topk.
     """
-    import numpy as np
-    import pandas as pd
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    # coarse quantizer: distributed Lloyd's over the whole corpus — the
-    # driver only ever sees k x dim centroid matrices, never the data
-    cmat = _train_coarse_centroids(e, n_centroids, iters=train_iters)
-    bc_cent = spark.sparkContext.broadcast(cmat)
-
-    def assign_batches(batches):
-        # inverted lists: each vector tagged with its nearest centroid id
-        cm = bc_cent.value
-        for batch in batches:
-            mat = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
-            yield pd.DataFrame(
-                {
-                    "vec_id": batch["vec_id"],
-                    "embedding": batch["embedding"],
-                    "cid": np.argmax(unit @ cm.T, axis=1).astype("int32"),
-                }
-            )
-
-    def probe_batches(batches):
-        # each query fans out to its n_probe nearest centroid lists
-        cm = bc_cent.value
-        for batch in batches:
-            mat = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
-            probes = np.argsort(-(unit @ cm.T), axis=1, kind="stable")[:, :n_probe]
-            n_rows = len(batch)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(batch["vec_id"].to_numpy(), n_probe),
-                    "embedding": batch["embedding"].iloc[
-                        np.repeat(np.arange(n_rows), n_probe)
-                    ].to_numpy(),
-                    "cid": probes.reshape(-1).astype("int32"),
-                }
-            )
-
-    vec_schema = "vec_id long, embedding array<float>, cid int"
-    assigned = e.mapInPandas(assign_batches, schema=vec_schema)
-    probed = e.mapInPandas(probe_batches, schema=vec_schema)
-
-    def rank_cogroup(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        # queries probing this centroid x index vectors assigned to it:
-        # one matmul per centroid list, partial top-k per query
-        if len(qpdf) == 0 or len(ipdf) == 0:
-            return _empty_pairs("cos_raw")
-        a_ids, a_unit = _unit_rows(qpdf)
-        b_ids, b_unit = _unit_rows(ipdf)
-        out_vec, out_nbr, out_cos = _partial_topk(a_ids, b_ids, a_unit @ b_unit.T, k)
-        if not out_vec:
-            return _empty_pairs("cos_raw")
-        return pd.DataFrame({"vec_id": out_vec, "nbr_id": out_nbr, "cos_raw": out_cos})
-
-    cand = (
-        probed.groupBy("cid")
-        .cogroup(assigned.groupBy("cid"))
-        .applyInPandas(rank_cogroup, schema="vec_id long, nbr_id long, cos_raw double")
-    )
-    # global re-rank of the per-list partials (a vector assigned to exactly
-    # one list and probing distinct lists never yields duplicate pairs)
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_raw").desc(), "nbr_id")
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("vec_id", "nbr_id", qround(F.col("cos_raw"), 4).alias("cosine"))
-    )
+    cent = _train_coarse_centroids(e, n_centroids, iters=train_iters)
+    return _ann_search(spark, sf_dir, k, centroids=cent, n_probe=n_probe)
 
 
 def pq_train_codebooks_distributed(
@@ -540,134 +635,19 @@ def pq_topk(
     """Product-quantization ANN (PQ-ADC + exact re-rank): the
     memory-compression scale path for similarity search.
 
-    Index build: unit vectors are split into m subvectors; per-subspace
-    k-means codebooks (trained DISTRIBUTED over the full corpus — one
-    fused assign+partial-sum pass per iteration covering all m subspaces,
-    `pq_train_codebooks_distributed`) quantize each
-    subvector to a code — the stored index is m small ints per vector
-    (m bytes at ksub<=256) instead of dim floats: 32x less index shuffled,
-    cached, and scanned at dim=64/m=8. Query: asymmetric distance
-    computation — one lookup table per (query, subspace) against the
-    broadcast codebooks, then the approximate inner product of every
-    candidate is m table lookups, no float math per pair. The coarse scan
-    keeps the top `refine` candidates per query; an exact-cosine re-rank
-    over raw vectors (refine * n rows, not n²) restores precision — the
-    standard IVFADC shape minus the coarse quantizer (compose with
-    ivf_topk's centroid partitioning for both). Measured on the hard case
-    of 500 near-orthogonal random vectors (m=8, ksub=16): recall vs brute
-    force 0.68 / 0.84 / 0.96 at refine 32 / 64 / 128 — `refine` is the
-    recall-vs-shuffle knob, and stays O(n * refine), never O(n²).
-
-    Distribution: same 2-D block cogroup as cosine_topk_blocked, but the
-    index side ships CODES ONLY — at 100 TB the all-pairs tile traffic
-    drops by the compression ratio, which is the whole point of PQ.
+    Trained parameters through the shared pipeline (_ann_search, the same
+    code q_pq_verified_topk runs on md5 codebooks): per-subspace k-means
+    codebooks train DISTRIBUTED over the full corpus
+    (`pq_train_codebooks_distributed`), each vector is encoded to m codes
+    (m bytes at ksub<=256 instead of dim floats), every query ranks every
+    code by asymmetric squared-L2 distance in a 2-D tile grid, and an
+    exact-cosine re-rank of the top `refine` candidates (refine * n rows,
+    not n²) restores precision. `refine` is the recall-vs-shuffle knob.
     Approximate → rows-only; tests assert recall vs q_cosine_topk."""
-    import numpy as np
-    import pandas as pd
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    # --- train: distributed per-subspace k-means over the FULL corpus ---
-    # (VERDICT r8 #5 — no driver-side sample beyond the ksub-row seed;
-    # per-iteration traffic is the m*ksub*dsub partial-sum table)
-    try:
-        books = pq_train_codebooks_distributed(e, m=m, ksub=ksub, iters=train_iters)
-    except ValueError as exc:
-        raise ValueError(
-            f"pq_topk: embedding dim is not divisible by m={m} "
-            "subspaces; pick m dividing dim (otherwise the trailing "
-            "dimensions would be silently dropped)"
-        ) from exc
-    dsub = books.shape[2]
-    bc_books = spark.sparkContext.broadcast(books)
-
-    # --- encode: one mapInPandas pass tags every vector with its m codes ---
-    def encode_batches(batches):
-        cb = bc_books.value
-        for b in batches:
-            mat = np.stack(b["embedding"].to_numpy()).astype("float64")
-            unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
-            codes = np.empty((len(b), m), dtype="int32")
-            for s in range(m):
-                sub = unit[:, s * dsub : (s + 1) * dsub]
-                d2 = ((sub[:, None, :] - cb[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
-            yield pd.DataFrame({"vec_id": b["vec_id"], "codes": list(codes)})
-
-    codes_df = e.mapInPandas(encode_batches, schema="vec_id long, codes array<int>")
-
-    # --- coarse ADC scan: 2-D block cogroup, queries x codes ---
-    n = _embeddings_rowcount(spark, sf_dir)
-    n_blocks = max(1, -(-n // index_block_rows))
-    queries = e.withColumn(
-        "qblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
-    ).withColumn(
-        "iblk", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)).cast("array<int>"))
-    )
-    indexed = codes_df.withColumn(
-        "iblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
-    ).withColumn(
-        "qblk", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)).cast("array<int>"))
-    )
-
-    def adc_cogroup(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(ipdf) == 0:
-            return _empty_pairs("approx_dot")
-        cb = bc_books.value  # (m, ksub, dsub)
-        a_ids, a_unit = _unit_rows(qpdf)
-        b_ids = ipdf["vec_id"].to_numpy()
-        codes = np.stack(ipdf["codes"].to_numpy())  # (ni, m)
-        # lookup tables: lut[q, s, c] = <q_sub[s], codebook[s][c]>
-        qsub = a_unit.reshape(len(a_ids), m, dsub)
-        lut = np.einsum("qsd,skd->qsk", qsub, cb)
-        # ADC as one dgemm: lut (nq, m*ksub) x one-hot codes (ni, m*ksub)ᵀ.
-        # The textbook per-subspace gather (acc += lut[:, s, codes[:, s]])
-        # is memory-gather-bound and measured ~4x slower than BLAS here;
-        # the one-hot matmul costs m*ksub-dim inner products but stays in
-        # dgemm. (The storage/shuffle win — codes, not floats — is
-        # unchanged; ADC compute only beats dgemm at much higher dim.)
-        oh = np.zeros((len(b_ids), m * ksub))
-        oh[np.arange(len(b_ids))[:, None], np.arange(m)[None, :] * ksub + codes] = 1.0
-        acc = lut.reshape(len(a_ids), m * ksub) @ oh.T
-        out_vec, out_nbr, out_dot = _partial_topk(a_ids, b_ids, acc, refine)
-        if not out_vec:
-            return _empty_pairs("approx_dot")
-        return pd.DataFrame(
-            {"vec_id": out_vec, "nbr_id": out_nbr, "approx_dot": out_dot}
-        )
-
-    partials = (
-        queries.groupBy("qblk", "iblk")
-        .cogroup(indexed.groupBy("qblk", "iblk"))
-        .applyInPandas(adc_cogroup, schema="vec_id long, nbr_id long, approx_dot double")
-    )
-    w_coarse = Window.partitionBy("vec_id").orderBy(F.col("approx_dot").desc(), "nbr_id")
-    cand = (
-        partials.withColumn("rn", F.row_number().over(w_coarse))
-        .filter(F.col("rn") <= refine)
-        .select("vec_id", "nbr_id")
-    )
-
-    # --- exact re-rank: refine * n rows, JVM-side zip_with dot product ---
-    va = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
-        F.col("vec_id"), F.col("vec").alias("va"), F.col("norm").alias("na")
-    )
-    vb = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
-        F.col("vec_id").alias("nbr_id"), F.col("vec").alias("vb"), F.col("norm").alias("nb")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    exact = cand.join(va, "vec_id").join(vb, "nbr_id").select(
-        "vec_id", "nbr_id", (dot / (F.col("na") * F.col("nb"))).alias("cos_sim")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), "nbr_id")
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("vec_id", "nbr_id", qround(F.col("cos_sim"), 4).alias("cosine"))
+    books = pq_train_codebooks_distributed(e, m=m, ksub=ksub, iters=train_iters)
+    return _ann_search(
+        spark, sf_dir, k, books=books, refine=refine, index_block_rows=index_block_rows
     )
 
 
@@ -682,170 +662,38 @@ def ivfpq_topk(
     train_iters: int = 10,
     refine: int = 64,
 ) -> DataFrame:
-    """IVF-PQ: the full FAISS-style IVFADC composition — and the shape that
-    actually survives 100 TB on BOTH axes:
+    """IVF-PQ: the FAISS-style IVFADC composition, sub-quadratic in
+    compute (queries probe n_probe of n_centroids lists) and compressed in
+    memory and shuffle (the lists carry PQ codes, not raw vectors).
 
-    - COMPUTE is sub-quadratic: queries probe only n_probe of n_centroids
-      inverted lists (ivf_topk's cogroup-on-centroid), so the candidate
-      count is ~n * n_probe / n_centroids per query side, never all pairs.
-    - MEMORY/SHUFFLE is compressed: inside a list, candidates are ranked
-      by PQ-ADC against m byte-codes per vector (pq_topk's one-hot dgemm),
-      so the inverted lists shuffle/cache codes, not raw vectors — the
-      index fits ~32x more vectors per executor at dim=64/m=8.
-
-    The coarse quantizer trains DISTRIBUTED over the full corpus
-    (_train_coarse_centroids → kmeans_fit), and so do the PQ codebooks
-    (`pq_train_codebooks_distributed` — residual codebooks are skipped so
-    the encode pass stays identical to pq_topk). Encode+assign is one
-    mapInPandas pass emitting (cid, codes);
-    probing fans each query to its n_probe nearest centroids; the
-    per-list ADC cogroup keeps top `refine` per (query, list); a global
-    window merges lists and an exact-cosine re-rank over refine*n rows
-    restores precision. Approximate → rows-only; tests assert recall vs
-    q_cosine_topk."""
-    import numpy as np
-    import pandas as pd
-
+    Trained parameters through the shared pipeline (_ann_search, the same
+    code q_ivfpq_verified_topk runs on md5 parameters): both quantizers
+    train DISTRIBUTED over the full corpus (_train_coarse_centroids and
+    `pq_train_codebooks_distributed`; residual codebooks are not used),
+    the per-list ADC keeps the top `refine` per query, and an exact-cosine
+    re-rank picks the top k. Approximate → rows-only; tests assert recall
+    vs q_cosine_topk."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    # --- BOTH quantizers train DISTRIBUTED over the full corpus: the
-    # coarse centroids via kmeans_fit (VERDICT r5 #3) and the per-subspace
-    # PQ codebooks via the fused assign+partial-sum pass (VERDICT r8 #5).
-    # Driver-side transit is the two bounded seeds plus k-sized
-    # per-iteration aggregates — no corpus sample ever lands on the driver.
-    cmat = _train_coarse_centroids(e, n_centroids, iters=4)
-    bc_cent = spark.sparkContext.broadcast(cmat)
-    try:
-        books = pq_train_codebooks_distributed(e, m=m, ksub=ksub, iters=train_iters)
-    except ValueError as exc:
-        raise ValueError(
-            f"ivfpq_topk: embedding dim is not divisible by m={m} "
-            "subspaces; pick m dividing dim (otherwise the trailing "
-            "dimensions would be silently dropped)"
-        ) from exc
-    dsub = books.shape[2]
-    bc_books = spark.sparkContext.broadcast(books)
-
-    # --- index: one pass emits (cid, codes) per vector — codes only ---
-    def encode_assign(batches):
-        cm = bc_cent.value
-        cb = bc_books.value
-        for b in batches:
-            if len(b) == 0:
-                continue
-            mat = np.stack(b["embedding"].to_numpy()).astype("float64")
-            unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
-            codes = np.empty((len(b), m), dtype="int32")
-            for s in range(m):
-                sub = unit[:, s * dsub : (s + 1) * dsub]
-                d2 = ((sub[:, None, :] - cb[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": b["vec_id"],
-                    "cid": np.argmax(unit @ cm.T, axis=1).astype("int32"),
-                    "codes": list(codes),
-                }
-            )
-
-    indexed = e.mapInPandas(
-        encode_assign, schema="vec_id long, cid int, codes array<int>"
-    )
-
-    # --- queries fan out to their n_probe nearest lists (raw vector) ---
-    def probe(batches):
-        cm = bc_cent.value
-        for b in batches:
-            if len(b) == 0:
-                continue
-            mat = np.stack(b["embedding"].to_numpy()).astype("float64")
-            unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
-            probes = np.argsort(-(unit @ cm.T), axis=1, kind="stable")[:, :n_probe]
-            n_rows = len(b)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(b["vec_id"].to_numpy(), n_probe),
-                    "embedding": b["embedding"].iloc[
-                        np.repeat(np.arange(n_rows), n_probe)
-                    ].to_numpy(),
-                    "cid": probes.reshape(-1).astype("int32"),
-                }
-            )
-
-    probed = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .mapInPandas(probe, schema="vec_id long, embedding array<float>, cid int")
-    )
-
-    # --- per-list ADC ranking: cogroup on centroid id, codes side only ---
-    def adc_rank(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        # same one-hot-dgemm ADC as pq_topk's kernel (see the comment
-        # there for why this beats the per-subspace gather)
-        if len(qpdf) == 0 or len(ipdf) == 0:
-            return _empty_pairs("approx_dot")
-        cb = bc_books.value
-        a_ids, a_unit = _unit_rows(qpdf)
-        b_ids = ipdf["vec_id"].to_numpy()
-        codes = np.stack(ipdf["codes"].to_numpy())
-        lut = np.einsum("qsd,skd->qsk", a_unit.reshape(len(a_ids), m, dsub), cb)
-        oh = np.zeros((len(b_ids), m * ksub))
-        oh[np.arange(len(b_ids))[:, None], np.arange(m)[None, :] * ksub + codes] = 1.0
-        acc = lut.reshape(len(a_ids), m * ksub) @ oh.T
-        out_vec, out_nbr, out_dot = _partial_topk(a_ids, b_ids, acc, refine)
-        if not out_vec:
-            return _empty_pairs("approx_dot")
-        return pd.DataFrame(
-            {"vec_id": out_vec, "nbr_id": out_nbr, "approx_dot": out_dot}
-        )
-
-    partials = (
-        probed.groupBy("cid")
-        .cogroup(indexed.groupBy("cid"))
-        .applyInPandas(adc_rank, schema="vec_id long, nbr_id long, approx_dot double")
-    )
-    w_coarse = Window.partitionBy("vec_id").orderBy(F.col("approx_dot").desc(), "nbr_id")
-    cand = (
-        partials.withColumn("rn", F.row_number().over(w_coarse))
-        .filter(F.col("rn") <= refine)
-        .select("vec_id", "nbr_id")
-    )
-
-    # --- exact re-rank over refine*n candidate rows ---
-    va = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
-        F.col("vec_id"), F.col("vec").alias("va"), F.col("norm").alias("na")
-    )
-    vb = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
-        F.col("vec_id").alias("nbr_id"), F.col("vec").alias("vb"), F.col("norm").alias("nb")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    exact = cand.join(va, "vec_id").join(vb, "nbr_id").select(
-        "vec_id", "nbr_id", (dot / (F.col("na") * F.col("nb"))).alias("cos_sim")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_sim").desc(), "nbr_id")
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("vec_id", "nbr_id", qround(F.col("cos_sim"), 4).alias("cosine"))
+    books = pq_train_codebooks_distributed(e, m=m, ksub=ksub, iters=train_iters)
+    cent = _train_coarse_centroids(e, n_centroids, iters=4)
+    return _ann_search(
+        spark, sf_dir, k, centroids=cent, n_probe=n_probe, books=books, refine=refine
     )
 
 
 @_q("q_ivfpq_topk")  # rows-only: approximate — recall vs q_cosine_topk is test-asserted
 def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible entry for the IVF-PQ composition (16 lists x 8
-    probes, 8x16 codebooks, refine=64). See ivfpq_topk."""
+    probes, 8x16 codebooks, refine=64). Shares one pipeline with
+    q_ivfpq_verified_topk; see ivfpq_topk."""
     return ivfpq_topk(spark, sf_dir)
 
 
 @_q("q_pq_topk")  # rows-only: approximate — recall vs q_cosine_topk is test-asserted
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible entry for the product-quantization ANN path (defaults:
-    k=3, 8 subspaces x 16 codes, refine=64). See pq_topk for the 100-TB
-    compression story."""
+    k=3, 8 subspaces x 16 codes, refine=64). Shares one pipeline with
+    q_pq_verified_topk; see pq_topk."""
     return pq_topk(spark, sf_dir)
 
 
@@ -861,18 +709,20 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("q_ivf_topk")  # rows-only: approximate — recall vs q_cosine_topk is test-asserted
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-visible entry for the IVF-Flat ANN scale path (defaults: k=3,
-    16 centroids, 4 probes). See ivf_topk for the 100-TB design notes."""
+    16 centroids, 4 probes). Shares one pipeline with q_ivf_verified_topk;
+    see ivf_topk and _ann_search for the 100-TB design notes."""
     return ivf_topk(spark, sf_dir)
 
 
 # ---------------------------------------------------- verified ANN (r10) ---
-# The ANN family (q_ann_lsh_topk / q_ivf_topk / q_pq_topk / q_ivfpq_topk) is
-# rows-only because its hyperplanes/codebooks come from numpy RNG + trained
-# k-means — not expressible in SQL. This variant closes that gap: the
-# hyperplanes are DERIVED FROM md5, a function both engines share, so the
-# ENTIRE pipeline (signature -> band buckets -> candidate equi-join -> exact
-# re-rank) has a bit-faithful DuckDB twin and the LSH path itself gets a
-# hash-checked driver row — not just its brute-force baseline.
+# The trained ANN keys (q_ann_lsh_topk / q_ivf_topk / q_pq_topk /
+# q_ivfpq_topk) are rows-only because their hyperplanes/codebooks come from
+# numpy RNG + trained k-means — not expressible in SQL. Each has a twin
+# whose parameters are DERIVED FROM md5, a function both engines share, so
+# a DuckDB oracle rebuilds the twin bit for bit. The IVF / PQ / IVF-PQ
+# twins run the same pipeline as their trained keys (_ann_search); the LSH
+# twin below (signature -> band buckets -> candidate equi-join -> exact
+# re-rank) is still a separate implementation of ann_lsh_topk's mechanism.
 
 ANN_V_DIM = 64  # embeddings.embedding width at every SF (TESTDATA.md)
 ANN_V_PLANES = 32
@@ -1390,6 +1240,24 @@ def _md5_unit_grid(spark: SparkSession, tag: str, n: int, dim: int) -> DataFrame
     )
 
 
+def _md5_grid_np(tag: str, n: int, dim: int):
+    """_md5_unit_grid(spark, tag, n, dim) as an (n, dim) numpy array, built
+    in the Spark driver: hashlib.md5 and Spark's F.md5 agree on every byte and
+    the scaling is the same IEEE double expression, so the two are equal
+    bit for bit (test-asserted for the "ivf" and "pq" grids). The md5 twins
+    of the IVF/PQ family take their parameters from it."""
+    import hashlib
+
+    import numpy as np
+
+    grid = np.empty((n, dim))
+    for c in range(n):
+        for d in range(dim):
+            h = hashlib.md5(f"{tag}:{c}:{d}".encode()).hexdigest()
+            grid[c, d] = (int(h[:4], 16) / 65535.0) * 2.0 - 1.0
+    return grid
+
+
 IVF_V_C = 16  # coarse centroids
 IVF_V_PROBE = 4  # lists each query probes
 IVF_V_K = 3
@@ -1456,103 +1324,21 @@ _IVF_VERIFIED_ORACLE = f"""
 
 @_q("q_ivf_verified_topk", _IVF_VERIFIED_ORACLE)
 def q_ivf_verified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-Flat ANN with a FULL oracle gate (r10): the coarse quantizer is
-    an md5-derived centroid grid instead of trained k-means, so DuckDB
-    rebuilds the identical centroids, inverted-list assignment (argmax
-    cosine-to-centroid), {IVF_V_PROBE}-probe candidate generation AND the
-    exact re-rank — the driver's hash check covers the IVF mechanics
-    (assign → probe → list-join → re-rank) end-to-end, which the trained
-    production variant q_ivf_topk structurally cannot offer (numpy RNG +
-    Lloyd's are not SQL). q_ivf_topk remains the production path; its
-    recall is pinned in tests, its plumbing is certified through this twin.
+    """IVF-Flat ANN with a FULL oracle gate: q_ivf_topk's pipeline run on
+    an md5-derived {IVF_V_C}x{ANN_V_DIM} centroid grid instead of trained
+    k-means, so DuckDB rebuilds the identical centroids, inverted-list
+    assignment (argmax cosine-to-centroid), {IVF_V_PROBE}-probe candidate
+    generation AND the exact list scoring.
 
-    Scale shape identical to production IVF: the centroid grid
-    ({IVF_V_C}x{ANN_V_DIM}) is a broadcast; scoring is one
-    map-side-combined groupBy(vec_id, c) over the posexploded stream;
-    assignment/probing is a per-vector window over {IVF_V_C} rows;
-    candidates come from the probe↔list EQUI-join on centroid id (each
-    query meets only its {IVF_V_PROBE} lists — never all-pairs); the exact
-    cosine touches candidates only. Hot-list skew at 100 TB is bounded by
-    the centroid count dial (more lists → smaller lists), same as
-    production. Float caveat: cross-engine sums differ ~1e-15 relative;
-    assignment/probe ranks compare scores of DISTINCT random centroids
-    (gaps ~1e-1), and the output cosine is quantized at 1e-4 — both ~11
-    orders of magnitude above the noise."""
-    def ranked_frame() -> DataFrame:
-        # built FRESH per cogroup side: the two sides of a cogroup must not
-        # share a subplan (the analyzer's self-join dedup leaves one side
-        # with ambiguous expression ids — the _block_sides lesson); the
-        # duplicated scoring pass is one cheap map-side-combined aggregate
-        cent = _md5_unit_grid(spark, "ivf", IVF_V_C, ANN_V_DIM)
-        cnorm = cent.groupBy("c").agg(
-            F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("cn")
-        )
-        ex = (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", F.posexplode("embedding").alias("d", "v"))
-            .withColumn("v", F.col("v").cast("double"))
-        )
-        dots = (
-            ex.join(F.broadcast(cent), "d")
-            .groupBy("vec_id", "c")
-            .agg(F.sum(F.col("v") * F.col("val")).alias("dot"))
-        )
-        wc = Window.partitionBy("vec_id").orderBy(
-            (F.col("dot") / F.col("cn")).desc(), "c"
-        )
-        return dots.join(F.broadcast(cnorm), "c").withColumn(
-            "rn", F.row_number().over(wc)
-        )
-
-    assigned = ranked_frame().filter(F.col("rn") == 1).select(
-        "vec_id", F.col("c").alias("cid")
-    )
-    probes = ranked_frame().filter(F.col("rn") <= IVF_V_PROBE).select(
-        "vec_id", F.col("c").alias("pc")
-    )
-    # re-rank as ONE cogroup-on-centroid job: each (probe-queries, list)
-    # pair meets in a single BLAS matmul — the same cogroup shape as the
-    # production ivf_topk (a zip_with-fold re-rank of the candidate join
-    # measured ~5x slower at the gate SF). Two independent reads (see
-    # _block_sides: a self-cogroup trips the analyzer's self-join dedup).
-    import numpy as np
-    import pandas as pd
-
-    qside = probes.join(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
-        "vec_id",
-    )
-    iside = assigned.join(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
-        "vec_id",
-    )
-
-    def rerank_cogroup(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(ipdf) == 0:
-            return _empty_pairs("cos_raw")
-        a_ids = qpdf["vec_id"].to_numpy()
-        a_mat = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-        a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-        b_ids = ipdf["vec_id"].to_numpy()
-        b_mat = np.stack(ipdf["embedding"].to_numpy()).astype("float64")
-        b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
-        cos = (a_mat @ b_mat.T) / (a_norms[:, None] * b_norms[None, :])
-        out_vec, out_nbr, out_sc = _partial_topk(a_ids, b_ids, cos, IVF_V_K)
-        if not out_vec:
-            return _empty_pairs("cos_raw")
-        return pd.DataFrame({"vec_id": out_vec, "nbr_id": out_nbr, "cos_raw": out_sc})
-
-    partials = (
-        qside.groupBy("pc")
-        .cogroup(iside.groupBy("cid"))
-        .applyInPandas(rerank_cogroup, schema="vec_id long, nbr_id long, cos_raw double")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_raw").desc(), "nbr_id")
-    return (
-        partials.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVF_V_K)
-        .select("vec_id", "nbr_id", qround(F.col("cos_raw"), 4).alias("cosine"))
-    )
+    The pair shares one pipeline (_ann_search) and differs only in its
+    parameters, so this key's hash check covers the assign → probe → list
+    scorer code q_ivf_topk ships; q_ivf_topk keeps its recall pinned in
+    tests. Float caveat: cross-engine sums differ ~1e-15 relative, the
+    smallest gap between adjacent probe-rank scores (ranks 1-5) is 4.0e-6
+    at sf0.1 (1.1e-5 at sf0.01), and the output cosine is quantized at
+    1e-4."""
+    cent = _md5_grid_np("ivf", IVF_V_C, ANN_V_DIM)
+    return _ann_search(spark, sf_dir, IVF_V_K, centroids=cent, n_probe=IVF_V_PROBE)
 
 
 PQ_V_S = 8  # subspaces (64-dim embedding -> 8 dims per subspace)
@@ -1631,128 +1417,29 @@ _PQ_VERIFIED_ORACLE = f"""
 
 @_q("q_pq_verified_topk", _PQ_VERIFIED_ORACLE)
 def q_pq_verified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN with a FULL oracle gate (r10): the
-    {PQ_V_S}x{PQ_V_CODES} codebooks are md5-derived instead of k-means-
-    trained, so DuckDB rebuilds encoding (per-subspace argmin), the
-    asymmetric-distance (ADC) shortlist AND the exact re-rank — with
-    q_ann_verified_topk (LSH) and q_ivf_verified_topk this completes the
-    hash-gated trio covering every ANN mechanism the production family
-    uses. q_pq_topk stays the production path (trained codebooks, Arrow
-    matmuls); its recall is pinned in tests, its mechanics certified here.
+    """Product-quantization ANN with a FULL oracle gate: q_pq_topk's
+    pipeline run on md5-derived {PQ_V_S}x{PQ_V_CODES} codebooks instead of
+    k-means-trained ones, so DuckDB rebuilds encoding (per-subspace
+    argmin), the asymmetric-distance (ADC) top-{PQ_V_REFINE} shortlist AND
+    the exact re-rank.
 
-    The ADC trick is shared-intermediate: for self-ANN the query lookup
-    table IS the encoding distance table (enc holds dist²(vec_sub, code)
-    for all {PQ_V_CODES} codes), so ADC(q, x) = Σ_s enc[q, s, code_x(s)]
-    — one equi-join on (subspace, code), no recomputation.
-
-    Scale shape: the codebook ({PQ_V_S * PQ_V_CODES}x{PQ_V_W}) is a
-    broadcast; encoding is one map-side-combined groupBy(vec_id, s, code);
-    the ADC join is the PQ-brute-force scan — O(n²/{PQ_V_CODES}) pairs per
-    subspace bucket, the memory-not-candidates compression PQ promises
-    (1 byte/subspace vs 32 bytes of floats). At 100 TB the candidate
-    reduction comes from composing with IVF lists (q_ivfpq_topk), exactly
-    as production does. Float caveat: argmin/rank compare distances of
-    DISTINCT random codewords (gaps ~1e-1) against ~1e-15 cross-engine
-    noise; output cosine quantized at 1e-4."""
-    grid = _md5_unit_grid(spark, "pq", PQ_V_S * PQ_V_CODES, PQ_V_W)
-    cb = grid.select(
-        F.pmod("c", F.lit(PQ_V_CODES)).alias("code"),
-        F.floor(F.col("c") / PQ_V_CODES).alias("s"),
-        (F.floor(F.col("c") / PQ_V_CODES) * PQ_V_W + F.col("d")).alias("dim"),
-        "val",
+    The pair shares one pipeline (_ann_search) and differs only in its
+    parameters (and refine), so this key's hash check covers the encode →
+    ADC → re-rank code q_pq_topk ships; q_pq_topk keeps its recall pinned
+    in tests. The oracle's ADC is the shared-intermediate form: for
+    self-ANN a query's lookup table IS its encoding distance table, so
+    ADC(q, x) = Σ_s enc[q, s, code_x(s)]. Ranks compare the 1e-6-quantized
+    ADC and the 1e-4-quantized cosine with nbr_id total tiebreaks, both
+    bit-identical cross-engine; the smallest gap between a subvector's two
+    nearest codewords is 2.3e-5 at sf0.1, far above ~1e-15 sum noise."""
+    books = _md5_grid_np("pq", PQ_V_S * PQ_V_CODES, PQ_V_W).reshape(
+        PQ_V_S, PQ_V_CODES, PQ_V_W
     )
-    ex = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.posexplode("embedding").alias("d", "v"))
-        .withColumn("v", F.col("v").cast("double"))
-    )
-    enc = (
-        ex.join(F.broadcast(cb), ex.d == cb.dim)
-        .groupBy("vec_id", "s", "code")
-        .agg(
-            F.sum((F.col("v") - F.col("val")) * (F.col("v") - F.col("val"))).alias(
-                "d2"
-            )
-        )
-    )
-    wc = Window.partitionBy("vec_id", "s").orderBy("d2", "code")
-    codes = (
-        enc.withColumn("rn", F.row_number().over(wc))
-        .filter(F.col("rn") == 1)
-        .select(F.col("vec_id").alias("nbr_id"), "s", "code")
-    )
-    # the corpus is clustered: many vectors share identical codes, so raw
-    # ADC ties are COMMON and 1e-16 summation-order noise would break them
-    # differently per engine right at the shortlist boundary — rank on the
-    # 1e-6-quantized ADC (values ~10, noise ~1e-15: nine orders of margin)
-    # with nbr_id as the total tiebreak, which is bit-identical cross-engine
-    adc = (
-        enc.join(codes, ["s", "code"])
-        .filter(F.col("vec_id") != F.col("nbr_id"))
-        .groupBy("vec_id", "nbr_id")
-        .agg(qround(F.sum("d2"), 6).alias("adc"))
-    )
-    wa = Window.partitionBy("vec_id").orderBy("adc", "nbr_id")
-    cand = (
-        adc.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= PQ_V_REFINE)
-        .select("vec_id", "nbr_id")
-    )
-    va = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
-        F.col("vec_id"), F.col("vec").alias("va"), F.col("norm").alias("na")
-    )
-    vb = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
-        F.col("vec_id").alias("nbr_id"),
-        F.col("vec").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    # same tie discipline for the final rank: duplicate embeddings make
-    # exact cosine ties common, so order by the already-quantized cosine
-    exact = cand.join(va, "vec_id").join(vb, "nbr_id").select(
-        "vec_id",
-        "nbr_id",
-        qround(dot / (F.col("na") * F.col("nb")), 4).alias("cosine"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "nbr_id")
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_V_K)
-        .select("vec_id", "nbr_id", "cosine")
-    )
+    return _ann_search(spark, sf_dir, PQ_V_K, books=books, refine=PQ_V_REFINE)
 
 
 IVFPQ_V_REFINE = 16  # ADC shortlist re-ranked exactly
 IVFPQ_V_K = 3
-
-_PQ_CODEBOOK_CACHE: dict = {}
-
-
-def _pq_codebook_np():
-    """The "pq" md5 grid as a (S, CODES, W) numpy array — byte-identical to
-    _md5_unit_grid(spark, "pq", S*CODES, W) reshaped by the q_pq_verified
-    cb mapping (code = c % CODES, s = c // CODES): hashlib.md5 and Spark's
-    F.md5 agree on every byte, and the scale arithmetic is the same IEEE
-    double expression, so the driver-built constant equals the SQL-built
-    grid exactly. Cached per process (executors build it once)."""
-    if "cb" not in _PQ_CODEBOOK_CACHE:
-        import hashlib
-
-        import numpy as np
-
-        cb = np.empty((PQ_V_S, PQ_V_CODES, PQ_V_W), dtype="float64")
-        for c in range(PQ_V_S * PQ_V_CODES):
-            for d in range(PQ_V_W):
-                h = hashlib.md5(f"pq:{c}:{d}".encode()).hexdigest()
-                cb[c // PQ_V_CODES, c % PQ_V_CODES, d] = (
-                    int(h[:4], 16) / 65535.0
-                ) * 2.0 - 1.0
-        _PQ_CODEBOOK_CACHE["cb"] = cb
-    return _PQ_CODEBOOK_CACHE["cb"]
 
 _IVFPQ_VERIFIED_ORACLE = f"""
     WITH cent AS ({_IVF_GRID_SQL.format(tag="ivf", n=IVF_V_C, dim=ANN_V_DIM)}),
@@ -1843,158 +1530,33 @@ _IVFPQ_VERIFIED_ORACLE = f"""
 
 @_q("q_ivfpq_verified_topk", _IVFPQ_VERIFIED_ORACLE)
 def q_ivfpq_verified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN with a FULL oracle gate (r11): the composition of the
-    md5-grid coarse quantizer (q_ivf_verified_topk's "ivf" centroids —
-    assignment + {IVF_V_PROBE}-probe candidate generation) with the
-    md5-codebook ADC scorer (q_pq_verified_topk's "pq" codebooks), so
+    """IVF-PQ ANN with a FULL oracle gate: q_ivfpq_topk's pipeline run on
+    the md5-derived parameters of q_ivf_verified_topk ("ivf" centroids,
+    {IVF_V_PROBE} probes) and q_pq_verified_topk ("pq" codebooks), so
     DuckDB rebuilds the identical two-level index end-to-end: coarse
-    assign → probe → list-restricted ADC shortlist → exact re-rank. This
-    closes the last ANN mechanism without a hash-gated twin — the
-    production q_ivfpq_topk (trained k-means + Arrow matmul ADC,
-    rows-only since r3) keeps its recall pinned in tests while its
-    composition mechanics are certified here.
+    assign → probe → list-restricted ADC shortlist → exact re-rank.
 
-    The composition IS the 100 TB story: PQ alone compresses memory but
-    still scans all n codes per query (q_pq_verified's honest O(n²/codes)
-    shape); IVF alone re-ranks raw floats. IVF-PQ probes
-    {IVF_V_PROBE}/{IVF_V_C} of the lists and scores only those candidates
-    with the 8-entry code gather. The ADC runs as ONE cogroup-on-centroid
-    job (the q_ivf_verified rerank shape): each (probe-queries, list)
-    pair meets in a numpy LUT gather — lut[q, s, code_x(s)] summed over
-    subspaces, the shared-intermediate trick where for self-ANN the
-    query's encoding-distance table IS its ADC lookup table — and only
-    per-list partial top-{IVFPQ_V_REFINE} rows leave the kernel, so the
-    shuffle after scoring is queries × probes × {IVFPQ_V_REFINE}, linear
-    in the corpus (the join formulation this replaced materialized
-    candidate × {PQ_V_S} shuffle rows and measured 63.9× at the 10×
-    probe; this form rides the BLAS-absorption lane of q_semdedup).
-    Partial-then-global top-k is lossless because both ranks share the
-    one total order (quantized adc, nbr_id). Tie discipline as
-    q_pq_verified: ranks compare 1e-6-quantized ADC and 1e-4-quantized
-    cosine with nbr_id total tiebreaks, both bit-identical
-    cross-engine."""
-    import numpy as np
-    import pandas as pd
-
-    def ranked_frame() -> DataFrame:
-        cent = _md5_unit_grid(spark, "ivf", IVF_V_C, ANN_V_DIM)
-        cnorm = cent.groupBy("c").agg(
-            F.sqrt(F.sum(F.col("val") * F.col("val"))).alias("cn")
-        )
-        ex = (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", F.posexplode("embedding").alias("d", "v"))
-            .withColumn("v", F.col("v").cast("double"))
-        )
-        dots = (
-            ex.join(F.broadcast(cent), "d")
-            .groupBy("vec_id", "c")
-            .agg(F.sum(F.col("v") * F.col("val")).alias("dot"))
-        )
-        wc = Window.partitionBy("vec_id").orderBy(
-            (F.col("dot") / F.col("cn")).desc(), "c"
-        )
-        return dots.join(F.broadcast(cnorm), "c").withColumn(
-            "rn", F.row_number().over(wc)
-        )
-
-    # r18: the coarse-assignment pipeline used to be built FRESH for each
-    # cogroup side (the _block_sides ambiguous-expression-id lesson), so
-    # the posexplode → centroid-dot → window ranking executed TWICE. A
-    # localCheckpoint of the tiny ranked table (vec × IVF_V_PROBE rows of
-    # three ints) runs it once, and the checkpoint's fresh LogicalRDD
-    # leaves nothing for the analyzer's self-join dedup to confuse —
-    # probes and assigned now derive from the same materialized frame.
-    ranked = (
-        ranked_frame()
-        .filter(F.col("rn") <= IVF_V_PROBE)
-        .select("vec_id", "c", "rn")
-        .localCheckpoint()
+    The pair shares one pipeline (_ann_search) and differs only in its
+    parameters (and n_probe, refine), so this key's hash check covers the
+    code q_ivfpq_topk ships; q_ivfpq_topk keeps its recall pinned in tests.
+    IVF-PQ probes {IVF_V_PROBE}/{IVF_V_C} of the lists and scores only
+    those candidates by ADC; only per-list partial top-{IVFPQ_V_REFINE}
+    rows leave the list scorer, so the shuffle after scoring is queries ×
+    probes × {IVFPQ_V_REFINE}, linear in the corpus. Tie discipline as
+    q_pq_verified_topk."""
+    cent = _md5_grid_np("ivf", IVF_V_C, ANN_V_DIM)
+    books = _md5_grid_np("pq", PQ_V_S * PQ_V_CODES, PQ_V_W).reshape(
+        PQ_V_S, PQ_V_CODES, PQ_V_W
     )
-    probes = ranked.select("vec_id", F.col("c").alias("pc"))
-    assigned = ranked.filter(F.col("rn") == 1).select(
-        F.col("vec_id").alias("nbr_id"), F.col("c").alias("cid")
+    return _ann_search(
+        spark,
+        sf_dir,
+        IVFPQ_V_K,
+        centroids=cent,
+        n_probe=IVF_V_PROBE,
+        books=books,
+        refine=IVFPQ_V_REFINE,
     )
-    qside = probes.join(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
-        "vec_id",
-    )
-    iside = assigned.join(
-        load_table(spark, sf_dir, "embeddings").select(
-            F.col("vec_id").alias("nbr_id"), "embedding"
-        ),
-        "nbr_id",
-    )
-
-    def adc_cogroup(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(ipdf) == 0:
-            return _empty_pairs("adc")
-        cb = _pq_codebook_np()  # (S, CODES, W)
-        q_ids = qpdf["vec_id"].to_numpy()
-        q_sub = (
-            np.stack(qpdf["embedding"].to_numpy())
-            .astype("float64")
-            .reshape(len(qpdf), PQ_V_S, PQ_V_W)
-        )
-        i_ids = ipdf["nbr_id"].to_numpy()
-        i_sub = (
-            np.stack(ipdf["embedding"].to_numpy())
-            .astype("float64")
-            .reshape(len(ipdf), PQ_V_S, PQ_V_W)
-        )
-        dq = q_sub[:, :, None, :] - cb[None, :, :, :]
-        lut = (dq * dq).sum(-1)  # (nq, S, CODES)
-        di = i_sub[:, :, None, :] - cb[None, :, :, :]
-        codes = (di * di).sum(-1).argmin(-1)  # (ni, S): first/lowest code wins
-        adc = np.zeros((len(q_ids), len(i_ids)))
-        for s in range(PQ_V_S):
-            adc += lut[:, s, codes[:, s]]
-        adcq = np.floor(adc * 1e6 + 0.5) / 1e6
-        out_vec, out_nbr, out_sc = _partial_topk(
-            q_ids, i_ids, -adcq, IVFPQ_V_REFINE
-        )
-        if not out_vec:
-            return _empty_pairs("adc")
-        return pd.DataFrame(
-            {"vec_id": out_vec, "nbr_id": out_nbr, "adc": [-s for s in out_sc]}
-        )
-
-    partials = (
-        qside.groupBy("pc")
-        .cogroup(iside.groupBy("cid"))
-        .applyInPandas(adc_cogroup, schema="vec_id long, nbr_id long, adc double")
-    )
-    wa = Window.partitionBy("vec_id").orderBy("adc", "nbr_id")
-    shortlist = (
-        partials.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= IVFPQ_V_REFINE)
-        .select("vec_id", "nbr_id")
-    )
-    va = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
-        F.col("vec_id"), F.col("vec").alias("va"), F.col("norm").alias("na")
-    )
-    vb = _as_double_vec(load_table(spark, sf_dir, "embeddings")).select(
-        F.col("vec_id").alias("nbr_id"),
-        F.col("vec").alias("vb"),
-        F.col("norm").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    exact = shortlist.join(va, "vec_id").join(vb, "nbr_id").select(
-        "vec_id",
-        "nbr_id",
-        qround(dot / (F.col("na") * F.col("nb")), 4).alias("cosine"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), "nbr_id")
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVFPQ_V_K)
-        .select("vec_id", "nbr_id", "cosine")
-    )
-
 
 
 def kmeans_fit(

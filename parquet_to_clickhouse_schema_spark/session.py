@@ -20,7 +20,9 @@ Scale notes (the configs are chosen for a real cluster, not just local[32]):
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 _TUNED_CONFS: dict[str, str] = {
@@ -62,6 +64,10 @@ def default_parallelism() -> int:
 _TUNED_MARKER = "spark.parquet_to_clickhouse_schema.tuned"
 
 
+def _conf_warn(key: str, exc: PySparkException) -> None:
+    warnings.warn(f"tune(): {key} not applied: {exc}", RuntimeWarning, stacklevel=3)
+
+
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults ONCE per session.
 
@@ -70,12 +76,15 @@ def tune(spark: SparkSession) -> SparkSession:
     autoBroadcastJoinThreshold=-1 to exercise a shuffle join, or an
     operator temporarily lowering a threshold. The marker conf records
     that this session already received the engine defaults; later calls
-    are no-ops and user overrides stick."""
+    are no-ops and user overrides stick.
+
+    A conf the deployment rejects (read-only or static) does not stop the
+    others: tune() warns with the conf key named and carries on."""
     try:
         if spark.conf.get(_TUNED_MARKER, None) == "1":
             return spark
-    except Exception:
-        pass
+    except PySparkException as exc:
+        _conf_warn(_TUNED_MARKER, exc)
     for k, v in _TUNED_CONFS.items():
         try:
             if k == "spark.sql.optimizer.excludedRules":
@@ -88,17 +97,17 @@ def tune(spark: SparkSession) -> SparkSession:
                 elif existing:
                     v = existing
             spark.conf.set(k, v)
-        except Exception:
-            pass  # read-only in some deployments; engine still works
+        except PySparkException as exc:
+            _conf_warn(k, exc)
     try:
         if int(spark.conf.get("spark.sql.shuffle.partitions")) > 4 * default_parallelism():
             spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
-    except Exception:
-        pass
+    except PySparkException as exc:
+        _conf_warn("spark.sql.shuffle.partitions", exc)
     try:
         spark.conf.set(_TUNED_MARKER, "1")
-    except Exception:
-        pass
+    except PySparkException as exc:
+        _conf_warn(_TUNED_MARKER, exc)
     return spark
 
 
